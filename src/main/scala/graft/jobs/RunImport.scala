@@ -11,8 +11,20 @@ import graft.sources.LandingFormat
 import graft.store.DayPartitionedTable
 
 /** The orchestrated driver — the reference's `make import`
-  * (Makefile:17-22): activity → flow → email → counts → daily summary,
-  * in order (the summary depends on activity_events being loaded).
+  * (Makefile:17-22), run as its dependency graph. Make runs activity →
+  * flow → email → counts → daily summary one after another, but the
+  * only real dependency is the summary reading activity_events. So
+  * four branches run concurrently through [[graft.util.Par]] —
+  * `activity → summaries`, `flow`, `email` and `counts`, each writing
+  * only its own tables — and compaction runs once all four finish.
+  *
+  * Failure: make stops at the first failing step, so after a MAXERROR
+  * abort in activity it leaves flow, email and counts unimported. Here
+  * the independent branches finish their days; only the failed branch
+  * (and, for activity, the summaries behind it) stops. `run` rethrows
+  * the failure once every branch has finished, without compacting,
+  * and the failed pipeline's days are picked up by the next run, which
+  * finds the other pipelines' days already populated.
   *
   * Landing layout (one dir per pipeline, day files inside):
   * {{{
@@ -29,7 +41,7 @@ import graft.store.DayPartitionedTable
   *
   * `formats` selects each event pipeline's landing WIRE format
   * ("activity" / "flow" / "email" → [[LandingFormat]], default CSV) —
-  * the whole Makefile-order orchestration runs unchanged over
+  * the whole orchestration runs unchanged over
   * JSON-lines landings, because everything downstream of readDay is
   * format-blind. The counts pipeline reads the reference's fixed
   * 3-field basic-metrics TXT (import_counts.py) and has no second
@@ -59,16 +71,20 @@ final class RunImport(
       dayFrom: Option[LocalDate] = None,
       dayUntil: Option[LocalDate] = None,
       forceReload: Boolean = false): Map[String, Seq[LocalDate]] = {
-    val a = activity.run(spark, s"$landingRoot/activity", "activity",
-      dayFrom, dayUntil, forceReload)
-    val f = flow.run(spark, s"$landingRoot/flow", "flow",
-      dayFrom, dayUntil, forceReload)
-    val e = email.run(spark, s"$landingRoot/email", "email-events",
-      dayFrom, dayUntil, forceReload)
-    val c = counts.run(spark, s"$landingRoot/counts", "fxa-basic-metrics",
-      forceReload)
-    if (activity.maxExtantDay(spark).isDefined) summaries.summarize(spark)
-    val imported = Map("activity" -> a, "flow" -> f, "email" -> e, "counts" -> c)
+    val branches: Seq[() => (String, Seq[LocalDate])] = Seq(
+      () => {
+        val a = activity.run(spark, s"$landingRoot/activity", "activity",
+          dayFrom, dayUntil, forceReload)
+        if (activity.maxExtantDay(spark).isDefined) summaries.summarize(spark)
+        "activity" -> a
+      },
+      () => "flow" -> flow.run(spark, s"$landingRoot/flow", "flow",
+        dayFrom, dayUntil, forceReload),
+      () => "email" -> email.run(spark, s"$landingRoot/email", "email-events",
+        dayFrom, dayUntil, forceReload),
+      () => "counts" -> counts.run(spark, s"$landingRoot/counts",
+        "fxa-basic-metrics", forceReload))
+    val imported = graft.util.Par.map(branches)(_.apply()).toMap
     compact(spark, imported)
     imported
   }

@@ -46,8 +46,11 @@ final class DailySummaries(
     new DayPartitionedTable(warehouse, s"daily_multi_device_users${tier.suffix}",
       sortCol = Some("uid"))
 
-  /** One summarize pass over every tier (`summarize_events`). */
-  def summarize(spark: SparkSession): Unit = tiers.foreach(summarizeTier(spark, _))
+  /** One summarize pass over every tier (`summarize_events`). Each tier
+    * reads and writes only its own tables, so the tiers run
+    * concurrently. */
+  def summarize(spark: SparkSession): Unit =
+    graft.util.Par.foreach(tiers)(summarizeTier(spark, _))
 
   private def summarizeTier(spark: SparkSession, tier: SampleTier): Unit = {
     val act = importer.table(tier)

@@ -102,6 +102,49 @@ class RunImportSpec extends SparkSpec {
     jsonJob.run(spark, from, until).values.foreach(_ shouldBe Seq.empty)
   }
 
+  test("a MAXERROR abort in activity stops only its branch; the next run picks it up") {
+    val root = TmpDirs.fresh("spec-runimport-isolation-landing")
+    val wh = TmpDirs.fresh("spec-runimport-isolation-wh")
+    val day = LocalDate.parse("2024-01-05")
+    def oneDay(df: org.apache.spark.sql.DataFrame) =
+      df.filter($"day" === lit(day.toString).cast("date"))
+    val act = oneDay(SparkEntry.activityStaging(spark, sfSmoke))
+    CsvEventSource.writeLanding(spark, act, s"$root/activity", "activity")
+    CsvEventSource.writeLanding(spark,
+      oneDay(SparkEntry.flowStaging(spark, sfSmoke)), s"$root/flow", "flow")
+    CsvEventSource.writeLanding(spark,
+      oneDay(SparkEntry.emailStaging(spark, sfSmoke)), s"$root/email", "email-events")
+    CsvEventSource.appendLines(spark, s"$root/counts/fxa-basic-metrics-$day.txt",
+      Seq(s"$day,10,7"))
+    // 101 unparseable rows: one over the activity importer's MAXERROR 100
+    CsvEventSource.appendLines(spark, s"$root/activity/activity-$day.csv",
+      (1 to 101).map(i => s"not_a_timestamp_$i,b,v,o,u,t,s,d"))
+
+    val job = new RunImport(wh, root, countsBegin = LocalDate.parse("2024-01-01"))
+    val full = job.tiers.find(_.suffix == "").get
+    intercept[CsvEventSource.MaxErrorExceeded](job.run(spark))
+    // the independent branches imported their day ...
+    job.flow.importer.table(full).hasDay(spark, day) shouldBe true
+    job.flow.metadataTable(full).hasDay(spark, day) shouldBe true
+    job.email.table(full).hasDay(spark, day) shouldBe true
+    job.counts.table.hasDay(spark, day) shouldBe true
+    // ... while activity and the summaries behind it wrote nothing
+    job.tiers.foreach { t =>
+      job.activity.table(t).hasDay(spark, day) shouldBe false
+      job.summaries.devicesTable(t).hasDay(spark, day) shouldBe false
+      job.summaries.multiDeviceTable(t).hasDay(spark, day) shouldBe false
+    }
+
+    // fix the file: the rerun imports activity and its summaries only
+    CsvEventSource.writeLanding(spark, act, s"$root/activity", "activity")
+    val again = job.run(spark)
+    again("activity") shouldBe Seq(day)
+    Seq("flow", "email", "counts").foreach(again(_) shouldBe Seq.empty)
+    job.activity.table(full).hasDay(spark, day) shouldBe true
+    job.summaries.devicesTable(full).hasDay(spark, day) shouldBe true
+    job.summaries.multiDeviceTable(full).hasDay(spark, day) shouldBe true
+  }
+
   test("D4: compact() restores fragmented touched partitions to target file counts") {
     val wh = TmpDirs.fresh("spec-runimport-compact")
     val job = new RunImport(wh, wh)

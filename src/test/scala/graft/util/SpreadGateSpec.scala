@@ -2,6 +2,7 @@ package graft.util
 
 import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
@@ -58,8 +59,8 @@ class SpreadGateSpec extends SparkSpec {
     try {
       val out = Spread.byKeyIfNarrow(in, col("id"))
       hasSpread(out) shouldBe false
-      // give the async listener bus a beat, then assert no job ran
-      Thread.sleep(500)
+      // deliver every posted event, then assert no job ran
+      ListenerBusDrain(spark.sparkContext)
       jobs.get shouldBe 0
     } finally spark.sparkContext.removeSparkListener(l)
     } finally spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
